@@ -48,17 +48,16 @@ import org.apache.spark.sql.SparkSession
   * DATA path, which is where layout/pruning work shows up. Round 8 (r7
   * verdict item 5): cold is the MIN of two fully-cold reps (cache clear
   * before EACH), mirroring the warm lane's adjacent min-of-2 — the
-  * single-shot cold lane carried a measured ±30% spread (AsofColdProbe)
-  * that absorbed 0.5–1 s moves on 2 s keys; min-of-2 keeps the lane
-  * honest (each rep pays the full derivation) while halving the band.
+  * single-shot cold lane carried a measured ±30% spread (PERF_NOTES.md
+  * round 7, qx_asof_custom) that absorbed 0.5–1 s moves on 2 s keys;
+  * min-of-2 keeps the lane honest (each rep pays the full derivation)
+  * while halving the band.
   * The warm total remains the headline `value` (the reference comparison
   * is a loaded ClickHouse); the cold numbers ride along as `cold_*`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // Per-bench token budget for warm passes (round 13, r12 verdict item
     // 1): SPARK_GRAFT_WARM_PASSES=3 runs the FULL warm lane three times
     // back-to-back in one session and reports min-of-passes per key plus
@@ -67,22 +66,13 @@ object Bench {
     // keeps the driver's per-round bench at its usual cost.
     val warmPasses = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_WARM_PASSES", "1").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregate (graft_topk, graft_last_by) stays on the hash
-      // path at dedup-key cardinality (the COUNT-based fallback engages beyond 4M groups)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the streaming breakdown sums recentProgress, a ring buffer whose
-      // DEFAULT cap (100) silently drops the earliest micro-batches once
-      // a lane exceeds it (sf1's doc-gate replay is ~190 batches) — the
-      // per-batch sums would then cover half the run while rows_per_sec
-      // covers all of it (round-8 review finding); size it to any lane
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
+    // the streaming breakdown sums recentProgress, a ring buffer whose
+    // DEFAULT cap (100) silently drops the earliest micro-batches once
+    // a lane exceeds it (sf1's doc-gate replay is ~190 batches) — the
+    // per-batch sums would then cover half the run while rows_per_sec
+    // covers all of it (round-8 review finding); size it to any lane
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- WARN-clean tail, ASSERTED (round 13, r12 verdict item 3) ----
@@ -246,6 +236,7 @@ object Bench {
     val CanaryKey = "q21_sec_codes"
     val CanaryEvery = 15
     val canarySamples = scala.collection.mutable.ArrayBuffer[Double]()
+    var canaryFailed = 0
     def canarySample(): Unit = try {
       graft.fixtures.Fixtures.clearDerivedCache(spark)
       currentKey.set("canary")
@@ -253,7 +244,12 @@ object Bench {
       exec(SparkEntry.queries(CanaryKey), sfDir)
       canarySamples += (System.nanoTime() - t0) / 1e9
       graft.fixtures.Fixtures.clearDerivedCache(spark)
-    } catch { case _: Throwable => () } // a failed sample is just absent
+    } catch { case scala.util.control.NonFatal(e) =>
+      // a failed sample never enters the series, but it is counted and
+      // reported: a silently thinner series would skew the drift factor
+      canaryFailed += 1
+      System.err.println(s"[bench] canary sample failed: ${e.getMessage}")
+    }
     // per-key value from EACH full pass (min-of-2 adjacent reps) — with
     // SPARK_GRAFT_WARM_PASSES > 1 the min across passes is the headline
     // and the cross-pass spread is the committed variance bound
@@ -335,8 +331,8 @@ object Bench {
     // ε absorbs benign jitter on sub-second keys.
     def inverted(w: Double, c: Double): Boolean = w > c + math.max(0.25, 0.15 * c)
     // Self-healing (round 8, r7 verdict item 2): every probed inversion so
-    // far (the r6 four, the r7 BPE pair, InversionProbe on the r7 driver
-    // pair) was a measurement artifact — a pause spanning BOTH adjacent
+    // far (the r6 four, the r7 BPE pair, the r7 q04/lm_score pair —
+    // PERF_NOTES.md round 8) was a measurement artifact — a pause spanning BOTH adjacent
     // reps on a shared machine. So instead of flag-and-probe-next-round,
     // give a flagged key one extra cache-cleared adjacent rep pair NOW and
     // report the overall min. Healed keys keep their original value in a
@@ -835,14 +831,17 @@ object Bench {
     // canary series + drift factor (round 16): median/min = how far above
     // its own best this machine ran during the run; the median is the
     // cross-round machine normalizer. Samples never enter totals.
-    val canaryJson = if (canarySamples.isEmpty) "null" else {
+    if (canaryFailed > 0)
+      System.err.println(s"[bench] canary: $canaryFailed failed sample(s), " +
+        s"${canarySamples.size} kept")
+    val canaryStats = if (canarySamples.isEmpty) "" else {
       val sorted = canarySamples.sorted
       val med = sorted(sorted.length / 2)
       val mn = sorted.head
-      s"""{"key":${jstr("q21_sec_codes")},"samples":[${
-        canarySamples.map(v => f"$v%.3f").mkString(",")}],""" +
-        f""""min":$mn%.3f,"median":$med%.3f,"drift":${med / mn}%.3f}"""
+      f""","min":$mn%.3f,"median":$med%.3f,"drift":${med / mn}%.3f"""
     }
+    val canaryJson = s"""{"key":${jstr(CanaryKey)},"samples":[${
+      canarySamples.map(v => f"$v%.3f").mkString(",")}],"failed":$canaryFailed$canaryStats}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold_total":$coldTotal,"cold_queries":$cqs,"errors":$es,"inversions":$invs,"reprobes":$reps,"unexpected_warns":$warnsJson$spreadJson,"canary":$canaryJson,"streaming":$streamingJson,"sf":"$sfDir"}"""
     // The driver keeps only the last ~2000 chars of stdout and parses the
     // JSON line out of that tail — the full artifact outgrew it rounds

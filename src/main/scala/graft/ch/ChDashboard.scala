@@ -18,6 +18,22 @@ object ChDashboard {
 
   def path: String = sys.env.getOrElse("GRAFT_DASHBOARD_JSON", DefaultPath)
 
+  private val missingNoted = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Whether the dashboard export is readable. The `ch_*` and `e2e_*`
+    * entries read their SQL from it at run time, so both modules register
+    * nothing without it; the first check in a JVM that finds it missing
+    * names the path and the entries that drops on stderr.
+    */
+  def available: Boolean = {
+    val ok = new File(path).isFile
+    if (!ok && missingNoted.compareAndSet(false, true))
+      System.err.println(s"[graft] missing input: dashboard JSON $path " +
+        s"(set GRAFT_DASHBOARD_JSON) - dropping ${graft.queries.ChQueries.entries.size} " +
+        s"ch_* and ${graft.queries.E2eQueries.entries.size} e2e_* entries")
+    ok
+  }
+
   // a dashboard export is immutable config — parse each file once per JVM
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 

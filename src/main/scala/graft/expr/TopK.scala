@@ -4,7 +4,6 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -246,90 +245,4 @@ case class TopKMerge(
     copy(child = newChildren(0), kExpr = newChildren(1))
 
   override def prettyName: String = "graft_topk_merge"
-}
-
-/** Session-level registration of the custom function surface — the two
-  * non-ANSI constructs the reference SQL uses (SURVEY §2.C):
-  * `topK(k)(col)` (GD:374) and `toStartOfInterval(t, INTERVAL n)` (GD:113),
-  * exposed to Spark SQL as `graft_topk(col, k)` and
-  * `to_start_of_interval(t, seconds)`.
-  */
-object GraftFunctions {
-  import org.apache.spark.sql.catalyst.expressions.{Cast, Pmod, SecondsToTimestamp, Subtract, UnixSeconds}
-  import org.apache.spark.sql.types.{LongType, TimestampType}
-
-  /** `toStartOfInterval(t, seconds)` as a Catalyst tree (shared by the
-    * per-session registry and [[graft.GraftExtensions]]).
-    */
-  def toStartOfInterval(exprs: Seq[Expression]): Expression = {
-    val us = UnixSeconds(Cast(exprs.head, TimestampType))
-    SecondsToTimestamp(Subtract(us, Pmod(us, Cast(exprs(1), LongType))))
-  }
-
-  /** Every name [[register]] installs — the idempotence guard checks ALL
-    * of them, because a session built with [[graft.GraftExtensions]]
-    * already has a SUBSET (the extension surface predates the tdigest
-    * trio) and a single-sentinel guard would then skip the rest entirely
-    * (round-12 review catch: `ch_*` tdigest-free sessions masked it).
-    */
-  private val RegisteredNames = Seq(
-    "graft_topk", "graft_topk_state", "graft_topk_merge", "graft_last_by",
-    "graft_tdigest_quantiles", "graft_tdigest_state", "graft_tdigest_merge",
-    "graft_capped_longs", "to_start_of_interval", "char_ngrams",
-    "word_ngrams", "vec_normsq", "vec_dot", "hyperplane_dots", "cdc_chunks")
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    // Idempotent-quiet (round 12, r11 verdict item 3): every QueryDef run
-    // calls register, and createOrReplaceTempFunction logs a
-    // "replaced a previously registered function" WARN on each replacement
-    // — hundreds of identical lines polluting the bench tail. The surface
-    // is byte-identical on every call, so skip when EVERY name is already
-    // installed; any missing name (fresh session, partial extension
-    // surface) re-runs the whole block.
-    if (RegisteredNames.forall(n => registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))) return
-    registry.createOrReplaceTempFunction(
-      "graft_topk", exprs => TopK(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_topk_state", exprs => TopKState(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_topk_merge", exprs => TopKMerge(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_last_by", exprs => LastBy(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_tdigest_quantiles",
-      exprs => TDigestQuantiles(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_tdigest_state", exprs => TDigestState(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_tdigest_merge",
-      exprs => TDigestMerge(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_capped_longs", exprs => CappedLongs(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "to_start_of_interval", exprs => toStartOfInterval(exprs), "built-in")
-    // codegen'd shingling (see graft.expr.NgramUtil): n and dedup must be
-    // literals — they parameterize the generated code
-    def litInt(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-    def litBool(e: Expression): Boolean = e.eval().asInstanceOf[Boolean]
-    registry.createOrReplaceTempFunction(
-      "char_ngrams", exprs =>
-        CharNgrams(exprs.head, litInt(exprs(1)), litBool(exprs(2))), "built-in")
-    registry.createOrReplaceTempFunction(
-      "word_ngrams", exprs =>
-        WordNgrams(exprs.head, litInt(exprs(1)), litBool(exprs(2))), "built-in")
-    // codegen'd quantized-vector kernels (see graft.expr.VecOps)
-    registry.createOrReplaceTempFunction(
-      "vec_normsq", exprs => VecNormSq(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "hyperplane_dots", exprs =>
-        HyperplaneDots(exprs.head, litInt(exprs(1))), "built-in")
-    // map-side CDC chunk fold (see graft.expr.CdcChunks): mod is a literal
-    registry.createOrReplaceTempFunction(
-      "cdc_chunks", exprs =>
-        CdcChunks(exprs.head, litInt(exprs(1))), "built-in")
-  }
 }

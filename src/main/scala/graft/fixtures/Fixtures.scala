@@ -96,7 +96,7 @@ object Fixtures {
   // entry, so the duplicate .cache() is idempotent and nothing needs
   // unpersisting.
   private def memo(spark: SparkSession, dir: String, name: String,
-      bytesPerPartDefault: Long = 64L << 10)(
+      bytesPerPart: Long = 64L << 10)(
       build: => DataFrame): DataFrame = {
     val key = spark.sparkContext.applicationId + "#" + dir + "#" + name
     val existing = tableCache.get(key)
@@ -111,8 +111,9 @@ object Fixtures {
       // measured llm_bpe_apply running 2x FASTER on 10x the data purely
       // because the bigger corpus happened to be written as 32 files.
       //
-      // The target is SIZE-PROPORTIONAL, not defaultParallelism flat:
-      // MemoAbProbe measured a flat 32 costing +0.5–2 s warm on every
+      // The target is SIZE-PROPORTIONAL, not defaultParallelism flat: an
+      // interleaved A/B (PERF_NOTES.md round 8, "cached-table parallelism
+      // normalization") measured a flat 32 costing +0.5–2 s warm on every
       // multi-job consumer of a 5k-row table (32 tasks re-deserializing
       // large task binaries — Bloom literals, broadcast stat tables — per
       // job, every job). One partition per ~64 KB of plan-stats bytes,
@@ -128,27 +129,13 @@ object Fixtures {
       // histograms multiply child sizes, and a BigInt past 2^63 would
       // otherwise .toLong-wrap to an arbitrary (possibly negative)
       // target and silently skip normalization (round-8 review finding).
-      // Divisor overridable for single-JVM A/B probes (round 15).
-      val bytesPerPart = sys.props.get("graft.memo.bytesPerPart")
-        .map { v =>
-          // probe knob — fail with the knob's NAME, not a bare
-          // NumberFormat/ArithmeticException from fixture construction
-          // (r15 ADVICE): non-numeric or non-positive values would
-          // otherwise surface as an unattributed crash inside memo()
-          val parsed = scala.util.Try(v.toLong).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft.memo.bytesPerPart must be a positive long, got '$v'"))
-          require(parsed > 0,
-            s"graft.memo.bytesPerPart must be a positive long, got '$v'")
-          parsed
-        }.getOrElse(bytesPerPartDefault)
       val target = (bytes / BigInt(bytesPerPart))
         .min(BigInt(spark.sparkContext.defaultParallelism))
         .max(BigInt(1)).toInt
-      // A/B probe escape hatch (system property so a single-JVM interleaved
-      // probe can flip it between cache-cleared reps)
-      val normalize = !sys.props.get("graft.memo.noNormalize").contains("1")
-      val df = if (normalize && df0.rdd.getNumPartitions < target) df0.repartition(target) else df0
+      // a 1-partition target never repartitions, so skip planning the rdd
+      // (for a shuffled build such as the securities dim, .rdd under AQE
+      // would run the shuffle map stage eagerly)
+      val df = if (target > 1 && df0.rdd.getNumPartitions < target) df0.repartition(target) else df0
       val built = df.cache()
       val prev = tableCache.putIfAbsent(key, built)
       if (prev != null) prev else built
@@ -159,7 +146,7 @@ object Fixtures {
     * pass replaced several `.cache()` sites with `localCheckpoint()` —
     * which truncates lineage but, unlike `.cache()`, is NOT plan-keyed:
     * a builder re-invoked for the warm lane's second rep creates a FRESH
-    * checkpoint and re-executes the whole derivation (KeyProbe r16:
+    * checkpoint and re-executes the whole derivation (`Probe keys` r16:
     * llm_ann_ledger warm ≈ cold ≈ 4.1 s — zero steady-state reuse). And
     * plan-keyed `.cache()` reuse cannot help closure-bearing plans
     * (mapPartitions codecs): each builder invocation creates a new
@@ -182,7 +169,8 @@ object Fixtures {
     * repo's bench/driver shape, single JVM). Any other master falls back
     * to `.cache()`: recomputable under executor loss and dynamic
     * allocation, at the cost of the full lineage staying in consumer
-    * plans (the r15 ADVICE gate).
+    * plans (the r15 ADVICE gate). Every lineage truncation in the engine
+    * goes through here; none calls `localCheckpoint()` directly.
     */
   def materialized(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint()
@@ -223,17 +211,13 @@ object Fixtures {
     * the parquet inputs.
     */
   def clearDerivedCache(spark: SparkSession): Unit = {
+    // both memos before the unpersist below (round 10): a surviving entry
+    // would be a half-state — the same DataFrame object, silently no
+    // longer cache-marked — whose consumers inline the raw derivation for
+    // the lifetime of the app (RuntimeFilterSpec caught the drift on the
+    // securities dim). Clearing makes the next access rebuild AND re-mark.
     tableCache.clear()
     derivedCache.clear()
-    // dimCache too (round 10): catalog.clearCache() UNPERSISTS the dim
-    // frames, so a surviving dimCache entry would be a half-state — the
-    // same DataFrame object, silently no longer cache-marked. Queries
-    // built on it then inline the raw derivation (filters push through
-    // the dim's distinct, join sides change shape — RuntimeFilterSpec
-    // caught the drift), and the `.cache()` is never re-applied for the
-    // lifetime of the app. Clearing the memo makes the next access
-    // rebuild AND re-mark, restoring the documented warm-lane state.
-    dimCache.clear()
     // Blocking release (round 14, r13 verdict items 2/6): catalog
     // .clearCache() unpersists every cached plan NON-blocking — the
     // storage blocks of the PREVIOUS key's caches are still being torn
@@ -375,18 +359,15 @@ object Fixtures {
     "CASE WHEN sec_n % 29 = 28 THEN 'false' ELSE 'true' END AS active"
   )
 
-  // The 60-row dim is built via a distinct() shuffle of `part`; memoize the
-  // cached plan per (session, dir) so repeated query invocations reuse one
+  // The 60-row dim is built via a distinct() shuffle of `part`; memoized
+  // like every base table (its size target is one partition, so the memo
+  // never repartitions it), so repeated query invocations reuse one
   // in-memory copy instead of rescanning (VERDICT perf note).
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def securities(spark: SparkSession, dir: String): DataFrame =
-    dimCache.computeIfAbsent(spark.sparkContext.applicationId + "#" + dir, _ =>
+    memo(spark, dir, "securities")(
       spark.read.parquet(s"$dir/part.parquet")
         .selectExpr("CAST(p_partkey % 60 AS INT) AS sec_n").distinct()
-        .selectExpr(securityCols: _*)
-        .cache())
+        .selectExpr(securityCols: _*))
 
   val securitiesCte: String =
     s"""securities AS (SELECT ${securityCols.mkString(",\n  ")}
@@ -703,7 +684,7 @@ object Fixtures {
     * microseconds per row. At the 64 KB/partition text-table rule the
     * 2 k-row sf0.1 corpus cached as ~30 partitions, and every job of the
     * 15-entry ANN/semdedup family paid ~30 task launches per stage for
-    * ~70 rows each (JobBreakdown: 40+ jobs × 30–63 tasks on the guarded
+    * ~70 rows each (`Probe jobs`: 40+ jobs × 30–63 tasks on the guarded
     * entry). 512 KB/partition keeps the SAME size-proportional,
     * machine-capped rule (sf1 still fans out to ~20+ partitions; real
     * deployments' multi-file scans never enter the branch) while cutting

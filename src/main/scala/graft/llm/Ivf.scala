@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fixtures.Fixtures
+
 /** IVF coarse-quantizer machinery (builder brief: similarity search, the
   * "IVF or LSH-bucketed variant as the scale path"): K centroids partition
   * the corpus into inverted lists; a query probes only its nprobe nearest
@@ -207,7 +209,7 @@ object Ivf {
       .withColumn("rk", expr(
         s"CAST(floor(rcosv * $KeyScale) AS BIGINT) * $g + (${g - 1} - coarse_id)"))
       .groupBy("cent_id").agg(max_by(col("coarse_id"), col("rk")).as("coarse_id"))
-      .localCheckpoint()
+      .transform(Fixtures.materialized)
     val fineByCoarse = fineMem.join(valid, "cent_id")
     val liveReps = reps.join(fineMem.select("coarse_id").distinct(), "coarse_id")
     // stage 3: coarse argmax over live cells, fine argmax within

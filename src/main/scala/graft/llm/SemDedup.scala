@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fixtures.Fixtures
+
 /** Scale guards for semantic dedup (round-6, closing the round-5 verdict's
   * `llm_semdedup` caveat): the within-cluster pairwise stage is quadratic
   * in CLUSTER SIZE, so at corpus scale two things must hold that a fixture
@@ -81,7 +83,8 @@ object SemDedup {
     * regime where chooseK's 2^20 cap binds (expected cluster size exceeds
     * the target because K can no longer grow with N) without needing a
     * 37-billion-vector corpus: force K below N/target and measure what
-    * the split + capped routes absorb. PostCapProbe commits the table.
+    * the split + capped routes absorb. PERF_NOTES.md round 16 holds the
+    * table.
     */
   private[graft] def guardedAssignWithK(emb: DataFrame, k: Int,
       targetClusterSize: Int, maxClusterSize: Int): DataFrame = {
@@ -102,7 +105,7 @@ object SemDedup {
     // re-planned it; the checkpoint truncates lineage at the same
     // storage cost.
     val assigned = Ivf.assignHier(emb, Ivf.initCent(emb, k, 0), k)
-      .localCheckpoint()
+      .transform(Fixtures.materialized)
     val sizes = assigned.groupBy("cent_id").agg(count(lit(1)).as("sz"))
     // sizes is K rows — broadcastable by chooseK's cap
     val flagged = assigned.join(broadcast(sizes), "cent_id")
@@ -145,7 +148,7 @@ object SemDedup {
     // executed twice per run and doubled the plan tree. Materialized once
     // as in-engine blocks (N 17-byte rows, the same storage class as the
     // `assigned` cache above), lineage truncated.
-    val refined = ok.unionByName(subAssigned).localCheckpoint()
+    val refined = ok.unionByName(subAssigned).transform(Fixtures.materialized)
     val refinedSizes = refined.groupBy("cluster_key").agg(count(lit(1)).as("rsz"))
     val flaggedOut = refined.join(refinedSizes, "cluster_key")
       .select(col("vec_id"), col("cluster_key"), col("split"),

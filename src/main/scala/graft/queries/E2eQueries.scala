@@ -383,11 +383,11 @@ object E2eQueries {
   )((s, d) => runPanelOver(s, readStoreFrom(s, ingestPruned(s, d)), 12,
     "not in [$sec_code_etf]", "toStartOfInterval(time,"))
 
+  val entries: Seq[QueryDef] = Seq(e2eDashboardJdbc, e2eDashboardJdbcNetto,
+    e2eDashboardJdbcCodes, e2eJdbcRestart, e2eJdbcPruned)
+
   /** Same dashboard-JSON guard as [[ChQueries.all]] — the entries read
     * the panels' rawSql from the reference checkout at runtime.
     */
-  def all: Seq[QueryDef] =
-    if (!new java.io.File(ChDashboard.path).isFile) Seq.empty
-    else Seq(e2eDashboardJdbc, e2eDashboardJdbcNetto, e2eDashboardJdbcCodes,
-      e2eJdbcRestart, e2eJdbcPruned)
+  def all: Seq[QueryDef] = if (ChDashboard.available) entries else Seq.empty
 }

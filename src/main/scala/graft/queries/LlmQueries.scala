@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.fixtures.Fixtures.{documents, embeddings}
+import graft.fixtures.Fixtures.{documents, embeddings, materialized}
 import graft.llm.{Embed, Ivf, Multimodal, Pq, RawMedia, Text}
 
 /** The LLM-training-data-pipeline operator surface (builder brief):
@@ -1717,7 +1717,7 @@ object LlmQueries {
         "CAST(size(regexp_extract_all(rich, ' ?[^a-z0-9 ]+', 0)) AS BIGINT) AS n_punct_tokens")
       // localCheckpoint: the ORDER BY's range sampling otherwise runs the
       // four-regex projection twice (audioMetaReal's note)
-      .localCheckpoint().orderBy("doc_id")
+      .transform(materialized).orderBy("doc_id")
   }
 
   /** Multimodal: binary media column → typed mapPartitions decode (stub
@@ -1732,7 +1732,7 @@ object LlmQueries {
     // range-sampling pass otherwise runs the decode twice)
     Multimodal.decodeMeta(
         Multimodal.attachMedia(documents(spark, dir)).as[RawMedia])
-      .toDF().localCheckpoint().orderBy("doc_id")
+      .toDF().transform(materialized).orderBy("doc_id")
   }
 
   /** Multimodal: audio metadata through the same codec-pluggable seam
@@ -1746,7 +1746,7 @@ object LlmQueries {
     import spark.implicits._
     Multimodal.decodeAudioMeta(
         Multimodal.attachMedia(documents(spark, dir)).as[RawMedia])
-      .toDF().localCheckpoint().orderBy("doc_id")
+      .toDF().transform(materialized).orderBy("doc_id")
   }
 
   /** Multimodal: resize to a bounded box through the codec seam (stub
@@ -1760,7 +1760,7 @@ object LlmQueries {
     import spark.implicits._
     Multimodal.resize(
         Multimodal.attachMedia(documents(spark, dir)).as[RawMedia])
-      .toDF().localCheckpoint().orderBy("doc_id")
+      .toDF().transform(materialized).orderBy("doc_id")
   }
 
   /** Multimodal with the REAL decoder in the registered, ORACLED path
@@ -1785,7 +1785,7 @@ object LlmQueries {
       Multimodal.renderPngTable(
         Multimodal.attachMedia(documents(spark, dir)).as[RawMedia]).toDF())
     Multimodal.decodeImageSumStage(png.as[RawMedia])
-      .toDF().localCheckpoint().orderBy("doc_id")
+      .toDF().transform(materialized).orderBy("doc_id")
   }
 
   /** Real-WAV twin of [[imageMetaReal]]: genuine RIFF/WAVE containers
@@ -1799,7 +1799,7 @@ object LlmQueries {
     // localCheckpoint before the presentation sort (round 15, guide §1.1/
     // §7.2): a global ORDER BY range-partitions, and RangePartitioner's
     // boundary-sampling pass executes the ENTIRE map-side child once
-    // before the real pass runs it again — JobBreakdown measured two
+    // before the real pass runs it again — `Probe jobs` measured two
     // equal ~1.45 s decode jobs per rep (render + javax.sound parse over
     // every row, twice). Materializing the decoded rows once (tiny typed
     // rows) makes the sampling pass read blocks instead of re-decoding:
@@ -1812,7 +1812,7 @@ object LlmQueries {
       Multimodal.renderWavTable(
         Multimodal.attachMedia(documents(spark, dir)).as[RawMedia]).toDF())
     Multimodal.decodeWavMetaStage(wav.as[RawMedia])
-      .toDF().localCheckpoint().orderBy("doc_id")
+      .toDF().transform(materialized).orderBy("doc_id")
   }
 
   /** Multimodal: video-style frame sampling — the 1→N explode of a binary
@@ -1825,7 +1825,7 @@ object LlmQueries {
     import spark.implicits._
     Multimodal.sampleFrames(
         Multimodal.attachMedia(documents(spark, dir)).as[RawMedia])
-      .toDF().localCheckpoint().orderBy("doc_id", "frame_idx")
+      .toDF().transform(materialized).orderBy("doc_id", "frame_idx")
   }
 
   // ---- HTML boilerplate extraction ----
@@ -2503,12 +2503,12 @@ object LlmQueries {
     // materializes each once as in-engine blocks and truncates lineage —
     // still distributed (NO driver collect, the 10^7-host shape is
     // unchanged), the loop stays the fixed 3-join plan. Measured
-    // 2.8–3.6 → 1.7–2.0 s warm at sf0.1 (KeyProbe, OPTIMIZATION_r15.md).
+    // 2.8–3.6 → 1.7–2.0 s warm at sf0.1 (`Probe keys`, OPTIMIZATION_r15.md).
     val deg = links.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
+      .transform(materialized)
     val nodes = links.select(col("src").as("host"))
       .union(links.select(col("dst").as("host"))).distinct()
-      .localCheckpoint()
+      .transform(materialized)
     var r = nodes.withColumn("r", lit(PrQ))
     for (_ <- 1 to PrIters) {
       val contrib = links
@@ -2518,7 +2518,7 @@ object LlmQueries {
         .groupBy("host").agg(sum("c").as("inflow"))
       r = nodes.join(contrib, Seq("host"), "left")
         .selectExpr("host", s"CAST($PrBase + coalesce(inflow, 0) AS BIGINT) AS r")
-        .localCheckpoint()
+        .transform(materialized)
     }
     nodes.join(broadcast(deg.withColumnRenamed("src", "host")), Seq("host"), "left")
       .join(r, "host")
@@ -5011,7 +5011,7 @@ object LlmQueries {
     * the join's absent frontier rows; min of BIGINTs is the same
     * deterministic tie-break). 32 vocab-sized shuffles + 16 RDD fences
     * become one shuffle and zero fences; measured 4.4 → 1.3 s warm at
-    * sf0.1 (KeyProbe, OPTIMIZATION_r15.md). The DuckDB oracle keeps the
+    * sf0.1 (`Probe keys`, OPTIMIZATION_r15.md). The DuckDB oracle keeps the
     * unrolled-CTE statement of the SAME recurrence, so the cross-engine
     * hash pins the rewrite's equivalence. Fertility = pieces per word,
     * the tokenizer-quality headline.
@@ -5236,7 +5236,7 @@ object LlmQueries {
     * several jobs at once — actions are only sequential because driver
     * code calls them sequentially. Under one action the five retrieval
     * methods' 5-task stages serialized (~3 s wall for ~1.5 s of work at
-    * local[32], JobBreakdown r16); materializing each method from its own
+    * local[32], `Probe jobs` r16); materializing each method from its own
     * thread lets their stages back-fill each other's idle cores. Sized to
     * the ledger's method count; daemon threads so the pool never blocks
     * JVM exit.
@@ -5363,7 +5363,7 @@ object LlmQueries {
     // scalar) - the cache kept the brute-force lineage in every
     // consumer's plan; the checkpoint truncates it at the same bounded
     // storage. derived-memo (round 16): a bare checkpoint is rebuilt by
-    // every builder re-invocation (KeyProbe: warm ≈ cold ≈ 4.1 s, zero
+    // every builder re-invocation (`Probe keys`: warm ≈ cold ≈ 4.1 s, zero
     // steady-state reuse), so the ground truth — the evaluation referent
     // a session holds resident, queries×10 rows — is memoized per
     // (app, dir) and dropped by clearDerivedCache like every other
@@ -5372,7 +5372,7 @@ object LlmQueries {
     // Round 16 overlap (guide §2.6): the five methods are INDEPENDENT
     // subtrees over the same cached corpus, each a handful of 5-task
     // stages — built under the single union action they serialized
-    // (JobBreakdown: ~3 s wall for ~1.5 s of summed job time at
+    // (`Probe jobs`: ~3 s wall for ~1.5 s of summed job time at
     // local[32]). Materialize each method from its own thread so their
     // stages back-fill each other's idle cores; every rep still
     // recomputes every approximate method (only the ground truth and the

@@ -6,17 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[GraftExtensions]] installs the full SQL function surface through the
   * standard `withExtensions` hook — a fresh session (no
   * GraftFunctions.register call anywhere) must resolve every function.
-  * Uses newSession()-independent config: the extensions object is applied
-  * at builder time, so this suite builds its own SparkSession instead of
-  * the shared one.
+  * The extensions object is applied at builder time, so this suite builds
+  * its own SparkSession instead of taking the [[GraftSession]] recipe.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("a session built with GraftExtensions resolves the whole function surface") {
-    // getOrCreate() would silently return an existing default session and
-    // never apply withExtensions — clear both slots so a REAL extensions
-    // session is built (sharing the JVM's SparkContext), and restore the
-    // shared suite session afterwards.
+  /** Run `f` in a REAL extensions-built session, then restore the shared
+    * suite session. getOrCreate() would silently return an existing
+    * default session and never apply withExtensions — so both slots are
+    * cleared first (the new session shares the JVM's SparkContext).
+    */
+  private def withExtensionsSession(f: SparkSession => Unit): Unit = {
     val prevDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -30,7 +30,19 @@ class ExtensionsSpec extends AnyFunSuite {
       .getOrCreate()
     // prove the extensions really took: this must NOT be a reused session
     assert(SparkSession.getDefaultSession.contains(spark))
-    try {
+    try f(spark)
+    finally {
+      // the shared SparkSuite session and this one coexist (same JVM,
+      // different SparkSessions over one SparkContext); don't stop the
+      // context other suites are using — restore the previous default
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("a session built with GraftExtensions resolves the whole function surface") {
+    withExtensionsSession { spark =>
       val r = spark.sql(
         """SELECT
           |  to_start_of_interval(timestamp'2024-12-06 10:03:45', 300) AS bucket,
@@ -62,13 +74,19 @@ class ExtensionsSpec extends AnyFunSuite {
       val asof = org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
         graft.plans.AsOfJoinPlan(lplan, rplan, Seq("k"), "t", "t", "seq", "v", attr))
       assert(asof.collect().map(x => (x.getInt(0), x.getDouble(3))).toSeq == Seq((1, 42.0)))
-    } finally {
-      // the shared SparkSuite session and this one coexist (same JVM,
-      // different SparkSessions over one SparkContext); don't stop the
-      // context other suites are using — restore the previous default
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("the extensions hook and register() both install every name in the one function table") {
+    val registered = SparkSuite.session
+    graft.expr.GraftFunctions.register(registered)
+    val names = graft.expr.GraftFunctions.table.map(_._1.funcName)
+    assert(names.distinct.size == names.size, s"duplicate names in the table: $names")
+    withExtensionsSession { ext =>
+      for (n <- names) {
+        assert(ext.catalog.functionExists(n), s"extensions session lacks $n")
+        assert(registered.catalog.functionExists(n), s"register()-ed session lacks $n")
+      }
     }
   }
 }

@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only single-entry correctness check (test scope — the committed
   * gate is the driver's full Verify + DuckDB run). Runs ONE registered
-  * entry under the Verify session config, dumps its parquet and oracle
+  * entry under the Verify session recipe ([[graft.GraftSession]]), dumps its parquet and oracle
   * SQL under /tmp/graft_onecheck/<name>, for tools/oracle_check.py to
   * compare. Usage:
   *   sbt "Test/runMain graft.tools.OneCheck <entry> [<entry2> ...]"
@@ -15,14 +13,7 @@ object OneCheck {
     require(args.nonEmpty, "usage: OneCheck <entryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = "/tmp/graft_onecheck"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val defs = graft.SparkEntry.allDefs.filter(d => args.contains(d.name))
@@ -33,16 +24,8 @@ object OneCheck {
         .parquet(s"$outDir/${d.name}")
       println(s"[onecheck] dumped ${d.name}")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = defs.flatMap(d => d.oracle.map(o => s"${q(d.name)}: ${q(o)}"))
+    import graft.Verify.jsonString
+    val json = defs.flatMap(d => d.oracle.map(o => s"${jsonString(d.name)}: ${jsonString(o)}"))
       .mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the adaptive-width recall claim empirically (round 7): the
   * embed-near-dup fixture plants exactly 50 cos≈0.99 twin pairs
   * (vec_id < 50 ↔ vec_id + 100000, replica 0 only in the scaled corpus),
@@ -15,13 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     for (dir <- Seq(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
         "/tmp/graft_sf1")) {

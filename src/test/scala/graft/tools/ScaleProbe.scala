@@ -105,8 +105,8 @@ object ScaleProbe {
     // llm_simhash_neardup is deliberately NOT here: this fixture's
     // Fisher-Yates replicas are exact bag-of-words duplicates —
     // degenerate for an order-invariant signature (every block trips
-    // the cap) — so its slope is measured by SimhashProbe on a
-    // token-substitution corpus instead.
+    // the cap) — so its slope was measured on a token-substitution
+    // corpus instead (PERF_NOTES.md round 8, simhash_neardup).
     "llm_token_budget", "llm_snapshot_diff",
     // KMV sketch: the corpus pass must compact to vocab before any window
     "llm_distinct_sketch",
@@ -197,14 +197,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaled = "/tmp/graft_sf1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$scaled/documents.parquet")))

@@ -52,14 +52,8 @@ object ScaleProbe2 {
     // lesson the brief's scale checklist calls out.
     val shufflePartitions =
       sys.env.get("SCALE2_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     spark.sparkContext.setLogLevel("ERROR")
 
     val entryNames = if (args.nonEmpty) args.toSeq else Entries
